@@ -77,7 +77,8 @@ def _batch_visibility_once(spark) -> float:
             seed_ev, ["order_id"], lsn_col="lsn_long", lsn_is_text=False
         ).filter(F.col("op") != "d").drop("op", "source_lsn", "lsn_long")
         ap.write_bucketed_target(seed, tgt, ["order_id"], dynamic=False)
-        append_frontier(seed_ev, fpath, 0)
+        seed_lsn, seed_n = seed_ev.agg(F.max("lsn_long"), F.count("*")).first()
+        append_frontier(spark, fpath, 0, seed_lsn, seed_n)
         batch_ev.write.parquet(f"{root}/incoming")
         batch_max = batch_ev.agg(F.max("lsn_long")).first()[0]
 

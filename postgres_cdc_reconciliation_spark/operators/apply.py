@@ -37,6 +37,10 @@ from ..functions.lsn import lsn_to_long
 #: stays a few GB, and a micro-batch touching k keys rewrites ≤ k buckets.
 DEFAULT_TARGET_BUCKETS = 64
 
+#: envelope columns an unwrapped change event carries beside its row
+#: image (``sources.cdc.unwrap``); the apply target stores only the image
+ENVELOPE_COLS = ("op", "source_lsn", "ts_ms", "__deleted")
+
 
 def _contains_map(dt) -> bool:
     """True if ``dt`` is or transitively contains a MapType — xxhash64
@@ -285,6 +289,22 @@ def _drop_lsn_keyable_exprs(key_cols: list[str], lsn_col: str, lsn_is_text: bool
     return lsn_long, keyable
 
 
+def _drop_count_exprs(lsn_long, keyable) -> list:
+    """The drop counters (events, unorderable_lsn, unkeyable, dropped) as
+    aggregate expressions. Categories can overlap (an event can be both
+    unorderable and unkeyable); 'dropped' is the exact count of events
+    latest_per_key's filter removes."""
+    droppable = lsn_long.isNull() | ~keyable
+    return [
+        F.count(F.lit(1)).alias("events"),
+        F.sum(F.when(lsn_long.isNull(), 1).otherwise(0))
+        .cast("long")
+        .alias("unorderable_lsn"),
+        F.sum(F.when(~keyable, 1).otherwise(0)).cast("long").alias("unkeyable"),
+        F.sum(F.when(droppable, 1).otherwise(0)).cast("long").alias("dropped"),
+    ]
+
+
 def drop_metrics_df(
     events: DataFrame,
     key_cols: list[str],
@@ -292,44 +312,49 @@ def drop_metrics_df(
     lsn_is_text: bool = True,
 ) -> DataFrame:
     """1-row frame (events, unorderable_lsn, unkeyable, dropped) — the
-    relational form of :func:`drop_metrics`, for scheduled feed audits
-    (driver-oracled as `q_apply_drop_audit`; the try_cast twin is
+    relational form of :func:`drop_metrics`' counters, for scheduled feed
+    audits (driver-oracled as `q_apply_drop_audit`; the try_cast twin is
     `q_cast_audit`). Zero everywhere on a well-formed feed."""
     lsn_long, keyable = _drop_lsn_keyable_exprs(key_cols, lsn_col, lsn_is_text)
-    droppable = lsn_long.isNull() | ~keyable
-    return events.agg(
-        F.count(F.lit(1)).alias("events"),
-        F.sum(F.when(lsn_long.isNull(), 1).otherwise(0))
-        .cast("long")
-        .alias("unorderable_lsn"),
-        F.sum(F.when(~keyable, 1).otherwise(0)).cast("long").alias("unkeyable"),
-        F.sum(F.when(droppable, 1).otherwise(0)).cast("long").alias("dropped"),
-    )
+    return events.agg(*_drop_count_exprs(lsn_long, keyable))
 
 
 def drop_metrics(
     events: DataFrame,
     key_cols: list[str],
+    n_buckets: int = DEFAULT_TARGET_BUCKETS,
     lsn_col: str = "source_lsn",
     lsn_is_text: bool = True,
 ) -> dict:
-    """Exact drop accounting for one event frame: how many events the
-    latest_per_key dirty-feed guards will discard (unparseable LSN /
-    NULL key), as a plain dict — one small all-map-side aggregate job.
+    """The one stats pass over an event frame, as a plain dict:
 
-    This is the form ``apply_stream`` uses per micro-batch. The
-    Observation-based zero-extra-pass variant (``latest_per_key(...,
-    observation=)``) is kept for BATCH callers, but must not be read
-    inside ``foreachBatch``: ``Observation.get`` blocks until the metrics
-    listener fires, and for micro-batch plans that join a batch file scan
-    (every batch after the first — the target parquet read) the listener
-    never fires, deadlocking the stream until awaitTermination's timeout
-    (found round 9; the round-8 e2e test only covered batch 1, the one
-    plan shape where it works). The micro-batch is pinned by the streaming
-    engine, so this extra pass is O(delta) with no file re-read."""
-    row = drop_metrics_df(events, key_cols, lsn_col, lsn_is_text).first()
-    return {k: (row[k] or 0) for k in
-            ("events", "unorderable_lsn", "unkeyable", "dropped")}
+    - ``events``, ``unorderable_lsn``, ``unkeyable``, ``dropped`` — exact
+      accounting of what the latest_per_key dirty-feed guards discard
+      (unparseable LSN / NULL key);
+    - ``applied_lsn_long`` — max parsed LSN over all events, dropped ones
+      included (they were consumed; None when no LSN parses);
+    - ``buckets`` — sorted ids of the PK-hash buckets the events touch.
+
+    ``apply_stream`` runs this once per micro-batch, and it is the batch's
+    only action before the merge: emptiness, the buckets to read and
+    rewrite, the drop warning and the frontier row all come from it. The
+    buckets list is bounded by ``n_buckets`` — ints, never rows. (It is an
+    action rather than ``observe`` metrics on the merge because
+    ``Observation.get`` never returns inside ``foreachBatch`` once the plan
+    joins a file scan.)"""
+    lsn_long, keyable = _drop_lsn_keyable_exprs(key_cols, lsn_col, lsn_is_text)
+    row = events.agg(
+        *_drop_count_exprs(lsn_long, keyable),
+        F.max(lsn_long).alias("applied_lsn_long"),
+        F.collect_set(bucket_expr(key_cols, n_buckets)).alias("buckets"),
+    ).first()
+    stats = {
+        k: (row[k] or 0)
+        for k in ("events", "unorderable_lsn", "unkeyable", "dropped")
+    }
+    stats["applied_lsn_long"] = row["applied_lsn_long"]
+    stats["buckets"] = sorted(row["buckets"])
+    return stats
 
 
 def _warn_dropped_events(metrics: dict, batch_id: int) -> None:
@@ -399,7 +424,6 @@ def latest_per_key(
     key_cols: list[str],
     lsn_col: str = "source_lsn",
     lsn_is_text: bool = True,
-    observation=None,
 ) -> DataFrame:
     """Collapse a micro-batch to the newest event per key (last-writer-wins).
 
@@ -421,15 +445,8 @@ def latest_per_key(
     (replayed/merged feeds), the tie breaks on a hash of the full payload
     instead of max_by's partition-arrival order — the partition-invariance
     the engine's determinism sweep pins everywhere else. All three guards
-    are no-ops on a well-formed feed.
-
-    Pass a ``pyspark.sql.Observation`` as ``observation`` to get drop
-    accounting for free (metrics ``events`` / ``unorderable_lsn`` /
-    ``unkeyable`` / ``dropped`` materialize with the caller's first action
-    over the result — no extra scan). BATCH callers only: inside a
-    streaming ``foreachBatch``, ``Observation.get`` deadlocks for plans
-    that join a batch file scan (the listener never fires — round 9);
-    use :func:`drop_metrics` there, as ``apply_stream`` does.
+    are no-ops on a well-formed feed. :func:`drop_metrics` counts what the
+    guards discard.
     """
     lsn_long, keyable = _drop_lsn_keyable_exprs(key_cols, lsn_col, lsn_is_text)
     payload = F.struct(*[F.col(c) for c in events.columns])
@@ -437,23 +454,6 @@ def latest_per_key(
         lsn_long.alias("_l"),
         payload_hash(events, events.columns).alias("_h"),
     )
-    if observation is not None:
-        # zero-extra-pass drop accounting (ADVICE r7: malformed LSNs now
-        # parse to NULL instead of failing loud, so the discard must be
-        # OBSERVABLE): piggyback aggregate metrics on whatever action the
-        # caller runs over the result. Categories can overlap (an event can
-        # be both unorderable and unkeyable); 'dropped' is the exact count
-        # of events the filter below removes.
-        droppable = lsn_long.isNull() | ~keyable
-        events = events.observe(
-            observation,
-            F.count(F.lit(1)).alias("events"),
-            F.sum(F.when(lsn_long.isNull(), 1).otherwise(0)).alias(
-                "unorderable_lsn"
-            ),
-            F.sum(F.when(~keyable, 1).otherwise(0)).alias("unkeyable"),
-            F.sum(F.when(droppable, 1).otherwise(0)).alias("dropped"),
-        )
     agg = (
         events.filter(lsn_long.isNotNull() & keyable)
         .groupBy(*[F.col(k) for k in key_cols])
@@ -468,9 +468,8 @@ def apply_batch(
     key_cols: list[str],
     lsn_col: str = "source_lsn",
     op_col: str = "op",
-    drop_cols: tuple[str, ...] = ("op", "source_lsn", "ts_ms", "__deleted"),
+    drop_cols: tuple[str, ...] = ENVELOPE_COLS,
     evolve_schema: bool = False,
-    observation=None,
 ) -> DataFrame:
     """Apply unwrapped change events to a target snapshot.
 
@@ -485,9 +484,7 @@ def apply_batch(
     NULL), and old-schema events missing target columns upsert NULL there.
     Column drops/renames/retypes stay errors — basic mode doesn't do them.
     """
-    latest = latest_per_key(
-        events, key_cols, lsn_col=lsn_col, observation=observation
-    )
+    latest = latest_per_key(events, key_cols, lsn_col=lsn_col)
     touched_keys = latest.select(*key_cols)
     upserts = latest.filter(F.col(op_col) != "d").drop(*drop_cols)
     if evolve_schema:
@@ -518,14 +515,24 @@ def apply_stream(
     n_buckets: int = DEFAULT_TARGET_BUCKETS,
     protocol: str = "overwrite",
     evolve_schema: bool = False,
-    drop_audit: int | str = "always",
 ):
     """Continuous apply: foreachBatch merge + frontier advance (T2+T5).
 
-    Each micro-batch: dedupe to latest-per-key, merge into the touched
-    PK-hash buckets of the parquet target, then append the new frontier
-    (max applied LSN) — the engine's analog of confirmed_flush_lsn
-    (check_batch_replication_status.sql:74-77).
+    Each micro-batch first runs ONE stats pass (:func:`drop_metrics`), its
+    only action before the merge. The stats row carries everything the
+    batch needs about itself:
+
+    - ``events == 0`` ends an empty batch at once;
+    - ``buckets`` names the PK-hash buckets to read and rewrite;
+    - the drop counters are always taken, and a warning names them
+      whenever the latest_per_key dirty-feed guards discard events
+      (unparseable LSN / NULL key) — drops are counted, never silent;
+    - the max parsed LSN and the event count become the frontier row,
+      appended after the data commit — the engine's analog of
+      confirmed_flush_lsn (check_batch_replication_status.sql:74-77).
+
+    The batch is then deduped to latest-per-key and merged into the
+    touched buckets of the target.
 
     Scale + crash-safety model:
 
@@ -561,40 +568,29 @@ def apply_stream(
       fails loud without touching the winner's committed data (the
       dynamic-overwrite path remains strictly single-writer). Read such
       targets with ``manifest_target.read_snapshot``.
-    - ``drop_audit`` controls the per-batch dirty-feed accounting
-      (:func:`drop_metrics` + loud warn). It is one extra all-map-side
-      aggregate job per micro-batch — exact and observable, but latency
-      paid forever even on perfectly clean feeds (ADVICE r9). ``"always"``
-      (default) keeps the exact audit; an int N samples every Nth batch
-      (``batch_id % N == 0`` — batch ids are contiguous, so a dirty feed
-      is still detected within N batches); ``"never"`` disables it for
-      latency-critical deployments (drops then happen per the documented
-      latest_per_key contract, silently — run :func:`drop_metrics_df` as
-      a scheduled feed audit instead, as `q_apply_drop_audit` does).
     """
-    from ..streaming.frontier import append_frontier
-
-    if drop_audit != "always" and drop_audit != "never":
-        if (
-            isinstance(drop_audit, bool)
-            or not isinstance(drop_audit, int)
-            or drop_audit < 1
-        ):
-            raise ValueError(
-                f"apply_stream: drop_audit must be 'always', 'never', or an "
-                f"int >= 1 (sample every Nth batch), got {drop_audit!r}"
-            )
-
-    def _audit_drops(batch_df: DataFrame, batch_id: int) -> None:
-        if drop_audit == "never":
-            return
-        if drop_audit != "always" and batch_id % drop_audit != 0:
-            return
-        _warn_dropped_events(drop_metrics(batch_df, key_cols), batch_id)
-
     spark = parsed_unwrapped.sparkSession
 
-    def _merge_manifest(batch_df: DataFrame, batch_id: int) -> None:
+    def _has_new_cols(batch_df: DataFrame, target_cols: list[str]) -> bool:
+        """True when the batch carries payload columns the target lacks;
+        raises unless additive evolution is on."""
+        new_cols = [
+            c
+            for c in batch_df.columns
+            if c not in ENVELOPE_COLS and c not in target_cols
+        ]
+        if new_cols and not evolve_schema:
+            raise ValueError(
+                f"events carry columns {new_cols} absent from the target; "
+                "pass evolve_schema=True (additive evolution) or fix the feed"
+            )
+        return bool(new_cols)
+
+    def _empty_target(batch_df: DataFrame) -> DataFrame:
+        """An empty target with the delta's payload schema (first batch)."""
+        return batch_df.limit(0).drop(*ENVELOPE_COLS)
+
+    def _merge_manifest(batch_df: DataFrame, buckets: list[int]) -> None:
         from .manifest_target import (
             LostRaceError,
             commit_delta,
@@ -603,21 +599,6 @@ def apply_stream(
             read_snapshot,
         )
 
-        if batch_df.isEmpty():
-            return
-        payload_cols = [
-            c
-            for c in batch_df.columns
-            if c not in ("op", "source_lsn", "ts_ms", "__deleted")
-        ]
-        delta_buckets = [
-            r[0]
-            for r in batch_df.select(
-                bucket_expr(key_cols, n_buckets).alias("_bucket")
-            )
-            .distinct()
-            .collect()
-        ]
         # base_version + bounded retry: the stream is no longer guaranteed
         # to be the target's ONLY writer — the DML verbs (delete_keys/
         # delete_where/update_where) and maintenance compact() run beside
@@ -627,7 +608,7 @@ def apply_stream(
         # re-reads + re-merges — the same idempotent re-merge its
         # crash-replay contract already performs.
         for attempt in range(5):
-            touched = delta_buckets
+            touched = buckets
             base_v, mapping = read_manifest(spark, target_path)
             target = None
             if mapping:
@@ -635,26 +616,16 @@ def apply_stream(
                 # path below preserves the invariant), so one bucket's footer
                 # answers the new-column check without touching the rest
                 probe = read_buckets(spark, target_path, [sorted(mapping)[0]])
-                new_cols = [c for c in payload_cols if c not in probe.columns]
-                if new_cols and not evolve_schema:
-                    raise ValueError(
-                        f"events carry columns {new_cols} absent from the "
-                        "target; pass evolve_schema=True (additive evolution) "
-                        "or fix the feed"
-                    )
-                if new_cols:
+                if _has_new_cols(batch_df, probe.columns):
                     # schema change: merge + commit EVERY live bucket in this
                     # one snapshot so the uniform-schema invariant holds (a
                     # touched-only commit would mix footers across bucket dirs)
                     target = read_snapshot(spark, target_path, version=base_v)
-                    touched = sorted(set(mapping) | set(delta_buckets))
+                    touched = sorted(set(mapping) | set(buckets))
                 else:
-                    target = read_buckets(spark, target_path, delta_buckets)
-            if target is None:  # first commit, or all touched buckets empty:
-                # empty target with the delta's payload schema
-                target = batch_df.limit(0).drop(
-                    "op", "source_lsn", "ts_ms", "__deleted"
-                )
+                    target = read_buckets(spark, target_path, buckets)
+            if target is None:  # first commit, or all touched buckets empty
+                target = _empty_target(batch_df)
             # No localCheckpoint here (unlike the overwrite path): the merge
             # plan reads only IMMUTABLE stage dirs pinned by explicit path
             # (read_buckets), so the stage write inside commit_delta is the
@@ -679,93 +650,57 @@ def apply_stream(
                     # silently reverted by our v1. ADVICE r12.)
                     base_version=base_v,
                 )
-                break
+                return
             except LostRaceError:
                 # ONLY the optimistic-concurrency loss is retriable; any
                 # other IO fault (disk, permissions, torn manifest) must
                 # fail the batch loudly rather than be re-merged 5 times.
                 if attempt == 4:
                     raise  # persistent contention: fail the batch loudly
-        _audit_drops(batch_df, batch_id)
-        if frontier_path is not None:
-            append_frontier(batch_df, frontier_path, batch_id)
 
-    def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        dynamic = True
-        delta_buckets: list[int] = []
-        payload_cols = [
-            c
-            for c in batch_df.columns
-            if c not in ("op", "source_lsn", "ts_ms", "__deleted")
-        ]
+    def _merge_overwrite(batch_df: DataFrame, buckets: list[int]) -> None:
         if _path_exists(spark, target_path) and _has_data_files(
             spark, target_path
         ):
             raw = spark.read.parquet(target_path)
-            new_cols = [
-                c for c in payload_cols if c not in raw.columns
-            ]
-            if new_cols and not evolve_schema:
-                raise ValueError(
-                    f"events carry columns {new_cols} absent from the target; "
-                    "pass evolve_schema=True (additive evolution) or fix the feed"
-                )
-            if new_cols:
+            if _has_new_cols(batch_df, raw.columns):
                 # schema change: full rewrite so every bucket file carries the
                 # evolved schema (see docstring) — one O(target) batch, then
                 # steady state returns to touched-buckets-only
                 target, dynamic = raw.drop("_bucket"), False
             elif "_bucket" in raw.columns:
-                # the pruning filter below recomputes bucket ids from the
-                # CALLER's n_buckets; a count disagreeing with the on-disk
-                # layout is caught by write_bucketed_target's validation
-                # BEFORE anything is written (one sidecar read per batch —
-                # a second pre-read validation here would double the
-                # metadata round-trips on the hot streaming path and buys
-                # only an earlier error for the same loud failure)
-                delta_buckets = [
-                    r[0]
-                    for r in batch_df.select(
-                        bucket_expr(key_cols, n_buckets).alias("_bucket")
-                    )
-                    .distinct()
-                    .collect()
-                ]  # bounded by n_buckets — driver-side list of ints, never rows
-                target = raw.filter(
-                    F.col("_bucket").isin(delta_buckets)
-                ).drop("_bucket")
+                # the pruning filter recomputes bucket ids from the CALLER's
+                # n_buckets; a count disagreeing with the on-disk layout is
+                # caught by write_bucketed_target's validation BEFORE
+                # anything is written (one sidecar read per batch — a second
+                # pre-read validation here would double the metadata
+                # round-trips on the hot streaming path and buys only an
+                # earlier error for the same loud failure)
+                target = raw.filter(F.col("_bucket").isin(buckets)).drop("_bucket")
+                dynamic = True
             else:
                 # legacy unpartitioned target (e.g. external snapshot):
                 # one-time O(target) migration into the bucketed layout
                 target, dynamic = raw, False
-            new_target = apply_batch(
-                target, batch_df, key_cols, evolve_schema=evolve_schema
-            )
-        else:  # first batch: empty target with the delta's payload schema
-            # (path absent, OR present but dataless — an empty-seed
-            # bootstrap / pre-created dir). Static write: nothing on disk
-            # to preserve, and it stamps the layout sidecar even though
-            # the dir technically "existed"
-            dynamic = False
-            new_target = apply_batch(
-                batch_df.limit(0).drop("op", "source_lsn", "ts_ms", "__deleted"),
-                batch_df,
-                key_cols,
-            )
+        else:
+            # first batch (path absent, OR present but dataless — an
+            # empty-seed bootstrap / pre-created dir). Static write: nothing
+            # on disk to preserve, and it stamps the layout sidecar even
+            # though the dir technically "existed"
+            target, dynamic = _empty_target(batch_df), False
         # materialize, then dynamic-overwrite only the touched buckets
-        new_target = new_target.localCheckpoint(eager=True)
-        _audit_drops(batch_df, batch_id)
+        new_target = apply_batch(
+            target, batch_df, key_cols, evolve_schema=evolve_schema
+        ).localCheckpoint(eager=True)
         write_bucketed_target(
             new_target, target_path, key_cols, n_buckets, dynamic=dynamic
         )
-        if dynamic and delta_buckets:
+        if dynamic:
             # dynamic overwrite only replaces partitions PRESENT in the
             # output — a bucket whose last rows were all deleted produces no
             # partition, so its stale dir must be dropped explicitly.
-            # (Replay-safe: checkpoint commits after _merge returns, so a
-            # crash here just re-runs the batch and re-deletes.)
+            # (Replay-safe: checkpoint commits after the batch function
+            # returns, so a crash here just re-runs the batch and re-deletes.)
             surviving = {
                 r[0]
                 for r in new_target.select(
@@ -778,14 +713,30 @@ def apply_stream(
             fs = jvm_path_cls(target_path).getFileSystem(
                 spark._jsc.hadoopConfiguration()
             )
-            for b in set(delta_buckets) - surviving:
+            for b in set(buckets) - surviving:
                 fs.delete(jvm_path_cls(f"{target_path}/_bucket={b}"), True)
-        if frontier_path is not None:
-            append_frontier(batch_df, frontier_path, batch_id)
 
-    fn = _merge_manifest if protocol == "manifest" else _merge
+    merge = _merge_manifest if protocol == "manifest" else _merge_overwrite
+
+    def _apply(batch_df: DataFrame, batch_id: int) -> None:
+        from ..streaming.frontier import append_frontier
+
+        stats = drop_metrics(batch_df, key_cols, n_buckets)
+        if stats["events"] == 0:
+            return
+        _warn_dropped_events(stats, batch_id)
+        merge(batch_df, stats["buckets"])
+        if frontier_path is not None:
+            append_frontier(
+                spark,
+                frontier_path,
+                batch_id,
+                stats["applied_lsn_long"],
+                stats["events"],
+            )
+
     return (
-        parsed_unwrapped.writeStream.foreachBatch(fn)
+        parsed_unwrapped.writeStream.foreachBatch(_apply)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("update")
     )

@@ -17,16 +17,29 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.lsn import long_to_lsn, lsn_to_long
+from ..functions.lsn import long_to_lsn
 
 
-def append_frontier(applied: DataFrame, frontier_path: str, batch_id: int) -> None:
-    """Record max applied LSN of a micro-batch (per source table if tagged)."""
-    row = applied.agg(
-        F.max(lsn_to_long("source_lsn")).alias("applied_lsn_long"),
-        F.count("*").alias("n_events"),
-    ).withColumn("micro_batch_id", F.lit(batch_id))
-    row.write.mode("append").parquet(frontier_path)
+def append_frontier(
+    spark,
+    frontier_path: str,
+    batch_id: int,
+    applied_lsn_long: int | None,
+    n_events: int,
+) -> None:
+    """Record a micro-batch's max applied LSN and event count.
+
+    The caller has already aggregated the batch (``apply_stream`` takes
+    both numbers from its one stats pass, ``apply.drop_metrics``), so this
+    writes a single driver-built row and never scans the batch. The row's
+    schema is the one ``monitor.heartbeat`` appends too, so a frontier dir
+    always reads as one table. (A parameterized literal SELECT, not
+    ``createDataFrame``: it plans in the JVM with no Python worker.)"""
+    spark.sql(
+        "SELECT CAST(:lsn AS BIGINT) AS applied_lsn_long, "
+        "CAST(:n AS BIGINT) AS n_events, CAST(:batch AS INT) AS micro_batch_id",
+        args={"lsn": applied_lsn_long, "n": n_events, "batch": batch_id},
+    ).write.mode("append").parquet(frontier_path)
 
 
 def current_frontier(spark, frontier_path: str) -> DataFrame:

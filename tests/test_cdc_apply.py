@@ -269,14 +269,16 @@ def test_null_key_events_never_upsert_ghost_rows(spark):
     assert out == {1: "a", 2: "b2"}
 
 
-def test_latest_per_key_drop_accounting_via_observation(spark):
+def test_drop_metrics_stats_pass(spark):
     """The dirty-feed guards drop unparseable-LSN / NULL-key events by
-    contract — but the discard must be OBSERVABLE (ADVICE r7). An
-    Observation passed to latest_per_key materializes exact drop counts
-    with the caller's own action, no extra scan."""
-    from pyspark.sql import Observation
-
-    from postgres_cdc_reconciliation_spark.operators.apply import latest_per_key
+    contract — but the discard must be OBSERVABLE (ADVICE r7).
+    drop_metrics, apply_stream's one stats pass per micro-batch, returns
+    exact drop counts beside the batch's max parsed LSN and touched
+    buckets."""
+    from postgres_cdc_reconciliation_spark.operators.apply import (
+        bucket_expr,
+        drop_metrics,
+    )
 
     ev = spark.createDataFrame(
         [
@@ -287,14 +289,20 @@ def test_latest_per_key_drop_accounting_via_observation(spark):
         ],
         "order_id long, source_lsn string, op string",
     )
-    obs = Observation()
-    out = latest_per_key(ev, ["order_id"], observation=obs)
-    assert out.count() == 1  # the action that materializes the metrics
-    m = obs.get
+    m = drop_metrics(ev, ["order_id"], n_buckets=8)
     assert m["events"] == 4
     assert m["unorderable_lsn"] == 2
     assert m["unkeyable"] == 2
     assert m["dropped"] == 3
+    assert m["dropped"] == m["events"] - latest_per_key(ev, ["order_id"]).count()
+    # dropped events still count toward the frontier: 0/20 was consumed
+    assert m["applied_lsn_long"] == 0x20
+    assert m["buckets"] == sorted(
+        {r[0] for r in ev.select(bucket_expr(["order_id"], 8)).collect()}
+    )
+    empty = drop_metrics(ev.limit(0), ["order_id"])
+    assert empty == {"events": 0, "unorderable_lsn": 0, "unkeyable": 0,
+                     "dropped": 0, "applied_lsn_long": None, "buckets": []}
 
 
 def test_apply_stream_logs_dropped_events(spark, tmp_path, caplog):

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+from pyspark.sql import functions as F
+
 from postgres_cdc_reconciliation_spark import fixtures as fx
 from postgres_cdc_reconciliation_spark.operators import status as st
 from postgres_cdc_reconciliation_spark.streaming.monitor import (
@@ -71,7 +73,8 @@ def test_wait_replication_complete(spark, sf_dir):
 def test_heartbeat_keeps_frontier_value(spark, tmp_path):
     fpath = str(tmp_path / "frontier")
     ev = fx.cdc_events_df(spark, "/root/testdata/sf0.001").limit(100)
-    append_frontier(ev, fpath, batch_id=0)
+    lsn, n = ev.agg(F.max("lsn_long"), F.count("*")).first()
+    append_frontier(spark, fpath, 0, lsn, n)
     before = current_frontier(spark, fpath).collect()[0]["frontier_lsn_long"]
     heartbeat(spark, fpath)
     after_rows = spark.read.parquet(fpath).count()

@@ -447,48 +447,75 @@ def test_stream_apply_survives_dirty_feed(spark, tmp_path):
     assert f["frontier_lsn"] == "0/20"
 
 
-def test_drop_audit_flag_validates_and_silences(spark, tmp_path, caplog):
-    """ADVICE r9: the per-batch drop audit is an extra aggregate job paid
-    on every micro-batch; latency-sensitive deployments can sample
-    (drop_audit=N) or disable ('never'). Contract: bad values raise
-    BEFORE the stream starts (bool included — int subclass), and 'never'
-    still applies the dirty feed correctly, just without the per-batch
-    warning."""
+def test_manifest_stream_counts_dirty_feed_drops(spark, tmp_path, caplog):
+    """The dirty-feed contract on the manifest protocol: a micro-batch
+    carrying one unparseable-LSN event and one NULL-key event warns with
+    both drops, commits the clean rows, and advances the frontier to the
+    max PARSEABLE LSN (0/20, the NULL-key event's position). A later batch
+    of NULL-key events only adds no row and still advances the frontier
+    to its max LSN: its events were consumed."""
     import logging
 
-    import pytest
+    from postgres_cdc_reconciliation_spark.operators.manifest_target import (
+        read_snapshot,
+    )
 
-    for bad in (0, -1, True, 2.5, "sometimes"):
-        with pytest.raises(ValueError, match="drop_audit"):
-            apply_stream(
-                spark.readStream.format("rate").load(),
-                str(tmp_path / "t"),
-                ["order_id"],
-                str(tmp_path / "c"),
-                drop_audit=bad,
-            )
-
-    src = tmp_path / "na_in"
+    src = tmp_path / "in"
     src.mkdir()
-    null_key_row = dict(_row(9, 90.0), order_id=None)
-    with open(src / "batch1.json", "w") as f:
-        f.write(json.dumps({"key": "1", "value": json.dumps(_env("r", None, _row(1, 10.0), "0/1"))}) + "\n")
-        f.write(json.dumps({"key": "x", "value": json.dumps(_env("u", None, null_key_row, "0/2"))}) + "\n")
-    target = str(tmp_path / "na_target")
-    q = apply_stream(
-        unwrap(parse_stream(read_cdc_stream(spark, file_path=str(src)))),
-        target,
-        ["order_id"],
-        str(tmp_path / "na_ckpt"),
-        drop_audit="never",
-    ).trigger(availableNow=True).start()
-    with caplog.at_level(
-        logging.WARNING, logger="postgres_cdc_reconciliation_spark.operators.apply"
-    ):
-        q.awaitTermination(120)
-    assert not [r for r in caplog.records if "dropped" in r.getMessage()]
-    final = {r["order_id"]: float(r["amount"]) for r in spark.read.parquet(target).collect()}
-    assert final == {1: 10.0}  # the null-key event cost itself, silently
+    target = str(tmp_path / "target")
+    frontier = str(tmp_path / "frontier")
+
+    def _land(name, envs):
+        with open(src / name, "w") as f:
+            for env in envs:
+                f.write(json.dumps({"key": "k", "value": json.dumps(env)}) + "\n")
+
+    def _run():
+        caplog.clear()
+        with caplog.at_level(
+            logging.WARNING,
+            logger="postgres_cdc_reconciliation_spark.operators.apply",
+        ):
+            q = apply_stream(
+                unwrap(parse_stream(read_cdc_stream(spark, file_path=str(src)))),
+                target,
+                ["order_id"],
+                str(tmp_path / "ckpt"),
+                frontier_path=frontier,
+                n_buckets=8,
+                protocol="manifest",
+            ).trigger(availableNow=True).start()
+            q.awaitTermination(120)
+        return [r.getMessage() for r in caplog.records if "dropped" in r.getMessage()]
+
+    def _state():
+        return {
+            r["order_id"]: float(r["amount"])
+            for r in read_snapshot(spark, target).collect()
+        }
+
+    def _null_key(oid):
+        return dict(_row(oid, oid * 10.0), order_id=None)
+
+    _land("batch1.json", [
+        _env("r", None, _row(1, 10.0), "0/1"),
+        _env("r", None, _row(2, 20.0), "0/2"),
+        _env("u", None, _row(8, 80.0), "XYZ"),  # unparseable LSN
+        _env("u", None, _null_key(9), "0/20"),  # NULL key
+    ])
+    msgs = _run()
+    assert msgs and "dropped 2 of 4 events" in msgs[0]
+    assert _state() == {1: 10.0, 2: 20.0}
+    assert current_frontier(spark, frontier).first()["frontier_lsn"] == "0/20"
+
+    _land("batch2.json", [
+        _env("u", None, _null_key(5), "0/30"),
+        _env("u", None, _null_key(6), "0/31"),
+    ])
+    msgs = _run()
+    assert msgs and "dropped 2 of 2 events" in msgs[0]
+    assert _state() == {1: 10.0, 2: 20.0}
+    assert current_frontier(spark, frontier).first()["frontier_lsn"] == "0/31"
 
 
 def test_apply_stream_into_dataless_target_dir(spark, tmp_path):
