@@ -83,6 +83,22 @@ def bucket_expr(key_cols: list[str], n_buckets: int = DEFAULT_TARGET_BUCKETS):
     )
 
 
+def cluster_by_bucket(
+    df: DataFrame, key_cols: list[str], n_buckets: int = DEFAULT_TARGET_BUCKETS
+) -> DataFrame:
+    """``df`` with its ``_bucket`` column, repartitioned on it — the input
+    of every ``partitionBy("_bucket")`` write. Each bucket's rows land in
+    exactly one task, so a write emits ONE file per bucket dir however
+    ``df`` was spread (without it, every task holding rows of a bucket
+    writes its own file, and a bucket read back from k files is merged by
+    k scan tasks into k new files — the count grows commit by commit).
+    The partition count is the session's shuffle setting; AQE may
+    coalesce partitions but never splits one."""
+    return df.withColumn("_bucket", bucket_expr(key_cols, n_buckets)).repartition(
+        "_bucket"
+    )
+
+
 #: sidecar recording the bucket count a target's layout was written with.
 #: Underscore-prefixed, so Spark's parquet file index ignores it.
 _LAYOUT_SIDECAR = "_pcr_layout.json"
@@ -231,7 +247,8 @@ def write_bucketed_target(
     ``partitionOverwriteMode=dynamic`` replaces only the ``_bucket=`` dirs
     present in ``df`` — untouched buckets keep their existing files. Pass
     ``dynamic=False`` for a full truncate-and-write (initial snapshot, or
-    migrating a legacy unpartitioned target).
+    migrating a legacy unpartitioned target). Every written bucket dir
+    gets exactly one file (``cluster_by_bucket``).
 
     The sidecar records the layout's ``n_buckets`` so later
     readers/writers can validate their bucket count against the layout
@@ -258,7 +275,7 @@ def write_bucketed_target(
     if dynamic and existed:
         validate_bucket_layout(spark, target_path, n_buckets)
     (
-        df.withColumn("_bucket", bucket_expr(key_cols, n_buckets))
+        cluster_by_bucket(df, key_cols, n_buckets)
         .write.mode("overwrite")
         .option(
             "partitionOverwriteMode", "dynamic" if dynamic else "static"

@@ -276,6 +276,34 @@ def test_dynamic_write_validates_layout_first(spark, tmp_path):
     assert _read_layout_n_buckets(spark, fresh) == 4
 
 
+def test_dynamic_write_leaves_one_file_per_bucket_dir(spark, tmp_path):
+    """An overwrite-protocol write clusters its rows on the bucket id: a
+    dynamic overwrite of a frame spread over 16 partitions leaves exactly
+    one file in every bucket dir, with the rows unchanged."""
+    import glob
+
+    from postgres_cdc_reconciliation_spark.operators.apply import (
+        read_target,
+        write_bucketed_target,
+    )
+
+    target = str(tmp_path / "t")
+    df = spark.range(200).selectExpr("id AS k", "id * 2 AS v")
+    write_bucketed_target(df, target, ["k"], n_buckets=4, dynamic=False)
+    # complete new content of every bucket, scattered over 16 tasks
+    new = df.selectExpr("k", "IF(k % 3 = 0, v + 1, v) AS v").repartition(16)
+    write_bucketed_target(new, target, ["k"], n_buckets=4, dynamic=True)
+
+    per_dir = {
+        d: len(glob.glob(f"{d}/*.parquet"))
+        for d in glob.glob(f"{target}/_bucket=*")
+    }
+    assert len(per_dir) == 4
+    assert set(per_dir.values()) == {1}, per_dir
+    got = sorted((r["k"], r["v"]) for r in read_target(spark, target).collect())
+    assert got == [(k, 2 * k + (1 if k % 3 == 0 else 0)) for k in range(200)]
+
+
 def _zone_table(spark, tmp_path, n=2000, n_files=10):
     from postgres_cdc_reconciliation_spark.operators.layout import (
         write_range_clustered,

@@ -244,8 +244,14 @@ class TestMaintainExecutor:
     the due verb and the report goes green after."""
 
     def _grown_manifest(self, spark, root):
+        import glob
+        import os
+        import shutil
+
         from postgres_cdc_reconciliation_spark.operators.manifest_target import (
+            _bucket_path,
             commit_delta,
+            read_manifest,
         )
 
         df = spark.range(100).select(
@@ -253,16 +259,22 @@ class TestMaintainExecutor:
         )
         commit_delta(df, root, ["k"], list(range(4)), 4)
         for i in range(10):  # versions accumulate -> vacuum due
-            commit_delta(
-                # complete bucket content each time (the delta contract);
-                # many write tasks -> many files per bucket dir in the
-                # LIVE stage label -> compact due
-                df.repartition(16),
-                root,
-                ["k"],
-                list(range(4)),
-                4,
-            )
+            # complete bucket content each time (the delta contract)
+            commit_delta(df, root, ["k"], list(range(4)), 4)
+        # a commit writes one file per bucket; a target written before
+        # commits clustered on the bucket id holds a live bucket's rows
+        # in several files. Rebuild one live bucket dir that way (same
+        # rows, 6 files) -> compact due
+        _, mapping = read_manifest(spark, root)
+        b = min(mapping)
+        bdir = _bucket_path(root, b, mapping[b])
+        scatter = f"{root}_scatter"
+        spark.read.parquet(bdir).repartition(6).write.parquet(scatter)
+        for f in glob.glob(f"{bdir}/*part-*"):
+            os.remove(f)
+        for f in glob.glob(f"{scatter}/*part-*"):
+            shutil.move(f, bdir)
+        assert len(glob.glob(f"{bdir}/*.parquet")) == 6
         return df
 
     def test_dry_run_touches_nothing(self, spark, tmp_path):

@@ -165,6 +165,70 @@ def test_incremental_commit_writes_only_touched_bucket_dirs(spark, tmp_path):
     assert all(snap[k] == -1 for k in (1, 8, 15))
 
 
+def _files_per_live_bucket(spark, root):
+    """{live bucket: parquet files in its dir} for the latest snapshot."""
+    from collections import Counter
+
+    from postgres_cdc_reconciliation_spark.operators.manifest_target import (
+        snapshot_files,
+    )
+
+    _, mapping = read_manifest(spark, root)
+    counts = Counter(b for b, _ in snapshot_files(spark, root))
+    return {b: counts[b] for b in mapping}
+
+
+def test_stream_commits_leave_one_file_per_live_bucket(spark, tmp_path):
+    """Every commit clusters its rows on the bucket id, so a bucket that
+    four micro-batches rewrote still holds exactly one file — the file
+    count of a bucket does not grow with the number of scan tasks that
+    read its previous content."""
+    import os
+
+    src = tmp_path / "in"
+    src.mkdir()
+    expected, lsn = {}, 0
+    for b in range(4):
+        events = []
+        # a seed of 80 keys, then updates to a quarter of them per batch:
+        # each commit merges untouched rows (from the bucket scan) with
+        # upserts (from the per-key aggregate) in every bucket
+        for k in range(1, 81) if b == 0 else range(b, 81, 4):
+            lsn += 1
+            expected[k] = float(k * 10 + b)
+            events.append(
+                (str(k), _env("r" if b == 0 else "u", None, _row(k, expected[k]), f"0/{lsn:X}"))
+            )
+        _write_events(src / f"b{b}.json", events)
+        # the file source orders by mtime: pin the batch order
+        os.utime(src / f"b{b}.json", (1_700_000_000 + b, 1_700_000_000 + b))
+    target = str(tmp_path / "target")
+    _run_stream(spark, src, target, str(tmp_path / "ckpt"), n_buckets=4)
+
+    v, mapping = read_manifest(spark, target)
+    assert v == 3  # four micro-batches, four commits
+    assert set(mapping) == {0, 1, 2, 3}
+    assert _files_per_live_bucket(spark, target) == {b: 1 for b in range(4)}
+    final = {
+        r["order_id"]: float(r["amount"])
+        for r in read_snapshot(spark, target).collect()
+    }
+    assert final == expected
+
+
+def test_commit_of_scattered_frame_writes_one_file_per_bucket(spark, tmp_path):
+    """A frame spread over 16 partitions still commits one file per
+    bucket dir, with its rows unchanged."""
+    root = str(tmp_path / "target")
+    df = spark.range(200).select(
+        F.col("id").alias("k"), (F.col("id") * 1.5).alias("v")
+    )
+    commit_delta(df.repartition(16), root, ["k"], list(range(4)), 4)
+    assert _files_per_live_bucket(spark, root) == {b: 1 for b in range(4)}
+    got = sorted((r["k"], r["v"]) for r in read_snapshot(spark, root).collect())
+    assert got == [(k, k * 1.5) for k in range(200)]
+
+
 def test_crashed_commit_is_invisible(spark, tmp_path):
     """Stage data written but manifest never renamed → readers still see the
     previous snapshot untouched (the atomicity property the in-place
