@@ -610,9 +610,9 @@ def apply_stream(
     def _merge_manifest(batch_df: DataFrame, buckets: list[int]) -> None:
         from .manifest_target import (
             LostRaceError,
+            _read_manifest_doc,
             commit_delta,
             read_buckets,
-            read_manifest,
             read_snapshot,
         )
 
@@ -626,19 +626,18 @@ def apply_stream(
         # crash-replay contract already performs.
         for attempt in range(5):
             touched = buckets
-            base_v, mapping = read_manifest(spark, target_path)
+            base_v, doc = _read_manifest_doc(spark, target_path)
             target = None
-            if mapping:
-                # bucket schemas are uniform within a snapshot (the evolution
-                # path below preserves the invariant), so one bucket's footer
-                # answers the new-column check without touching the rest
-                probe = read_buckets(spark, target_path, [sorted(mapping)[0]])
-                if _has_new_cols(batch_df, probe.columns):
+            if base_v >= 0:
+                # the doc's stamped schema is the snapshot's schema: the
+                # new-column check needs no read of the data
+                stamped = [f["name"] for f in doc["schema"]["fields"]]
+                if _has_new_cols(batch_df, stamped):
                     # schema change: merge + commit EVERY live bucket in this
                     # one snapshot so the uniform-schema invariant holds (a
                     # touched-only commit would mix footers across bucket dirs)
                     target = read_snapshot(spark, target_path, version=base_v)
-                    touched = sorted(set(mapping) | set(buckets))
+                    touched = sorted(set(doc["buckets"]) | set(buckets))
                 else:
                     target = read_buckets(spark, target_path, buckets)
             if target is None:  # first commit, or all touched buckets empty

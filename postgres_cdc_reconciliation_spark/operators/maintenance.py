@@ -88,26 +88,22 @@ def _read_json(fs, spark, path: str) -> dict:
 
 
 def _manifest_row(spark, fs, path, max_files_per_bucket, max_versions):
-    from .manifest_target import (
-        STAGE_DIR,
-        _doc_at,
-        _manifest_versions,
-        read_manifest,
-    )
+    from .manifest_target import STAGE_DIR, _manifest_versions, _read_manifest_doc
 
     versions = _manifest_versions(spark, path)
-    _, mapping = read_manifest(spark, path)
     # every committed version's labels are REACHABLE (time travel), not
     # orphans — only a stage dir no manifest points at is vacuum's food
     live_labels = set()
+    mapping: dict[int, str] = {}  # the latest version's, after the loop
     for v in versions:
-        doc = _doc_at(spark, path, v)
-        live_labels |= {str(dv) for dv in doc["buckets"].values()}
+        _, doc = _read_manifest_doc(spark, path, v)
+        mapping = doc["buckets"]
+        live_labels |= set(mapping.values())
     # one glob per LIVE label (labels <= commits, usually << buckets)
     # instead of a listStatus round-trip per live bucket dir — 256 buckets
     # over 11 labels cost 11 py4j calls, not 256, and a full-stage-tree
     # glob (which also walks every historical version's dirs) is avoided
-    current = {(str(label), int(b)) for b, label in mapping.items()}
+    current = {(label, b) for b, label in mapping.items()}
     n_files = n_bytes = 0
     per_bucket: dict[int, int] = {}
     for label in sorted({label for label, _ in current}):
@@ -531,8 +527,8 @@ def maintain(
       concurrent commit surfaces as the lost race and compact is retried
       (bounded), exactly the DML loop's discipline. ``vacuum`` honors
       ``min_attempt_age_seconds`` so in-flight attempts are never
-      reclaimed. key_cols come from the manifest's own stamp; a legacy
-      manifest without one reports executed=false with the manual verb.
+      reclaimed. key_cols and n_buckets come from the manifest's own
+      stamps.
     - **semantic_index / text_index / batch_store / stamped_parquet
       (file-count)**: compact to ``{path}__compacted`` then swap in via
       rename, keeping ``{path}__pre_compact`` as the operator's backup.
@@ -591,18 +587,11 @@ def _execute(
             from .manifest_target import compact as manifest_compact
 
             _, doc = _read_manifest_doc(spark, path)
-            key_cols = doc.get("key_cols")
-            if not key_cols:
-                return (
-                    path, tier, action, False,
-                    "manifest predates the key_cols stamp — run "
-                    "compact(root, key_cols, n_buckets) manually once; "
-                    "the re-commit stamps key_cols for future runs",
-                )
-            n_buckets = int(doc["n_buckets"])
             for attempt in range(5):
                 try:
-                    v = manifest_compact(spark, path, list(key_cols), n_buckets)
+                    v = manifest_compact(
+                        spark, path, doc["key_cols"], doc["n_buckets"]
+                    )
                     return (
                         path, tier, action, True,
                         f"compacted to one file per bucket at v{v}",

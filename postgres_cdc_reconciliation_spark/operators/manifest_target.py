@@ -22,7 +22,9 @@ pointer standardized:
   untouched (optimistic concurrency). Exclusivity comes from the create,
   not from rename semantics — see ``_commit_manifest_doc`` for the
   torn-file crash window this trades in and the legacy tmp+rename
-  fallback.
+  fallback. Every manifest carries the same stamps (``commit_delta``
+  writes them all), and the one reader, ``_read_manifest_doc``, rejects
+  a doc that lacks any of them.
 - Readers resolve the highest complete manifest and read exactly the dirs it
   lists. A writer crash before the rename — or a lost commit race — leaves
   only an orphan stage dir; the previous snapshot stays fully intact and
@@ -63,11 +65,23 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from .apply import bucket_expr, cluster_by_bucket
 
 MANIFEST_DIR = "_manifests"
 STAGE_DIR = "stage"
+#: stamps every commit writes (``commit_delta``), validated by the one
+#: reader; ``touched`` is not here because full commits omit it on purpose
+_REQUIRED_STAMPS = (
+    "version",
+    "n_buckets",
+    "key_cols",
+    "buckets",
+    "schema",
+    "operation",
+    "committed_at",
+)
 
 
 class LostRaceError(IOError):
@@ -98,18 +112,32 @@ def _manifest_versions(spark: SparkSession, root: str) -> list[int]:
     return sorted(out)
 
 
-def _read_manifest_doc(spark: SparkSession, root: str) -> tuple[int, dict]:
-    """(version, parsed manifest doc) for the latest snapshot — ONE dir
-    listing + ONE open, shared by every consumer needing both the bucket
-    mapping and the recorded layout (commit_delta reads it once per
-    commit; a separate read per field would double the metadata
-    round-trips on the hot streaming path). ``(-1, {})`` when no snapshot
-    is committed yet."""
-    versions = _manifest_versions(spark, root)
-    if not versions:
-        return -1, {}
-    v = versions[-1]
-    fs, mpath = _fs(spark, f"{root}/{MANIFEST_DIR}/v{v}.json")
+def _read_manifest_doc(
+    spark: SparkSession, root: str, version: int | None = None
+) -> tuple[int, dict]:
+    """(version, validated manifest doc) — the ONE code path that opens a
+    manifest file. ``version`` pins a committed manifest; None resolves
+    the latest with ONE dir listing + ONE open, shared by every consumer
+    needing both the bucket mapping and the recorded layout (a separate
+    read per field would double the metadata round-trips on the hot
+    streaming path). ``(-1, {})`` when no snapshot is committed yet;
+    FileNotFoundError when a pinned version was never committed (or is no
+    longer retained).
+
+    Every stamp in ``_REQUIRED_STAMPS`` is checked here, once, so callers
+    read ``doc[...]`` directly; ``doc["buckets"]`` comes back parsed as
+    ``{bucket: stage_label}``."""
+    if version is None:
+        versions = _manifest_versions(spark, root)
+        if not versions:
+            return -1, {}
+        v = versions[-1]
+    else:
+        v = version
+    path = f"{root}/{MANIFEST_DIR}/v{v}.json"
+    fs, mpath = _fs(spark, path)
+    if version is not None and not fs.exists(mpath):
+        raise FileNotFoundError(f"no committed (or retained) manifest {path}")
 
     def _read_once() -> str:
         stream = fs.open(mpath)
@@ -124,73 +152,50 @@ def _read_manifest_doc(spark: SparkSession, root: str) -> tuple[int, dict]:
     # means a writer DIED mid-commit — fail loud with the one-file
     # remediation (the previous version's manifest and every stage dir are
     # intact; deleting the torn file restores the prior snapshot).
-    import time
-
     last_err: Exception | None = None
     for attempt in range(4):
         if attempt:
             time.sleep(0.15)
         try:
-            return v, json.loads(_read_once())
+            doc = json.loads(_read_once())
+            break
         except ValueError as e:  # json.JSONDecodeError subclasses ValueError
             last_err = e
-    raise IOError(
-        f"unparseable manifest v{v}.json at {root}/{MANIFEST_DIR} after 4 "
-        f"reads ({last_err}): a writer likely died mid-commit — delete that "
-        "file to restore the previous committed snapshot (stage dirs are "
-        "immutable; no data loss)"
-    )
+    else:
+        raise IOError(
+            f"unparseable manifest v{v}.json at {root}/{MANIFEST_DIR} after 4 "
+            f"reads ({last_err}): a writer likely died mid-commit — delete "
+            "that file to restore the previous committed snapshot (stage "
+            "dirs are immutable; no data loss)"
+        )
+    for stamp in _REQUIRED_STAMPS:
+        if stamp not in doc:
+            raise ValueError(f"manifest {path} lacks the required {stamp!r} stamp")
+    doc["buckets"] = {int(b): str(dv) for b, dv in doc["buckets"].items()}
+    return v, doc
 
 
 def read_manifest(spark: SparkSession, root: str) -> tuple[int, dict[int, str]]:
     """Resolve the current snapshot: (version, {bucket: stage_label}).
 
-    Stage labels are ``"<v>-<token>"`` (one immutable dir per commit
-    attempt); pre-token (legacy) manifests recorded plain version ints,
-    which normalize to the same string space — dir ``v=<label>`` either way.
-    Returns ``(-1, {})`` for a target with no committed snapshot yet."""
+    Stage labels are ``"<v>-<token>"``: one immutable dir
+    ``v=<label>`` per commit attempt. Returns ``(-1, {})`` for a target
+    with no committed snapshot yet."""
     v, doc = _read_manifest_doc(spark, root)
-    if v < 0:
-        return -1, {}
-    return v, {int(b): str(dv) for b, dv in doc["buckets"].items()}
+    return v, (doc["buckets"] if v >= 0 else {})
 
 
-def _bucket_path(root: str, bucket: int, stage_label: int | str) -> str:
+def _bucket_path(root: str, bucket: int, stage_label: str) -> str:
     return f"{root}/{STAGE_DIR}/v={stage_label}/_bucket={bucket}"
-
-
-def _doc_at(spark: SparkSession, root: str, version: int | None) -> dict:
-    """Parsed manifest doc for a pinned version (None → latest). Raises
-    FileNotFoundError when the pinned version was never committed (or is
-    no longer retained), or when no snapshot exists at all."""
-    if version is None:
-        v, doc = _read_manifest_doc(spark, root)
-        if v < 0:
-            raise FileNotFoundError(f"no committed snapshot at {root}")
-        return doc
-    if version not in _manifest_versions(spark, root):
-        raise FileNotFoundError(
-            f"no committed (or retained) manifest v{version} at {root}"
-        )
-    fs, mpath = _fs(spark, f"{root}/{MANIFEST_DIR}/v{version}.json")
-    stream = fs.open(mpath)
-    try:
-        doc = json.loads(bytes(stream.readAllBytes()).decode("utf-8"))
-    finally:
-        stream.close()
-    return doc
 
 
 def _mapping_at(
     spark: SparkSession, root: str, version: int | None
 ) -> dict[int, str]:
-    """{bucket: stage_label} for a pinned manifest (None → latest)."""
-    if version is None:
-        _, buckets = read_manifest(spark, root)
-        return buckets
-    return {
-        int(b): str(dv) for b, dv in _doc_at(spark, root, version)["buckets"].items()
-    }
+    """{bucket: stage_label} for a pinned manifest (None → latest, ``{}``
+    when no snapshot is committed)."""
+    v, doc = _read_manifest_doc(spark, root, version)
+    return doc["buckets"] if v >= 0 else {}
 
 
 def read_snapshot(
@@ -207,20 +212,13 @@ def read_snapshot(
     table (first commit was empty, or every key was deleted) — distinct
     from "no snapshot committed". An empty snapshot has no parquet files
     to carry the schema, so the manifest stamps it at commit time and the
-    empty frame is rebuilt from that record; pre-schema-stamp (legacy)
-    manifests can only fail loud here."""
-    doc = _doc_at(spark, root, version)
-    buckets = {int(b): str(dv) for b, dv in doc["buckets"].items()}
+    empty frame is rebuilt from that record."""
+    v, doc = _read_manifest_doc(spark, root, version)
+    if v < 0:
+        raise FileNotFoundError(f"no committed snapshot at {root}")
+    buckets = doc["buckets"]
     if not buckets:
-        schema_doc = doc.get("schema")
-        if schema_doc is None:
-            raise FileNotFoundError(
-                f"empty snapshot at {root} predates schema stamping — "
-                "no parquet files and no recorded schema to rebuild from"
-            )
-        from pyspark.sql.types import StructType
-
-        return spark.createDataFrame([], StructType.fromJson(schema_doc))
+        return spark.createDataFrame([], StructType.fromJson(doc["schema"]))
     paths = [_bucket_path(root, b, dv) for b, dv in sorted(buckets.items())]
     return spark.read.parquet(*paths)
 
@@ -268,15 +266,10 @@ def read_keys(
     bucket is live (all keys absent)."""
     if not keys:
         raise ValueError("keys must be non-empty — for a full read use read_snapshot")
-    doc = _doc_at(spark, root, version)
-    n_buckets = doc.get("n_buckets")
-    if n_buckets is None:
-        raise ValueError(
-            f"manifest at {root} predates the n_buckets stamp — key routing "
-            "cannot be derived; re-commit once (any delta) to stamp it"
-        )
-    n_buckets = int(n_buckets)
-    mapping = {int(b): str(dv) for b, dv in doc["buckets"].items()}
+    v, doc = _read_manifest_doc(spark, root, version)
+    if v < 0:
+        raise FileNotFoundError(f"no committed snapshot at {root}")
+    n_buckets, mapping = doc["n_buckets"], doc["buckets"]
     rows = [k if isinstance(k, tuple) else (k,) for k in keys]
     if any(len(r) != len(key_cols) for r in rows):
         raise ValueError(f"every key must carry {len(key_cols)} value(s)")
@@ -290,16 +283,7 @@ def read_keys(
     }
     paths = [_bucket_path(root, b, mapping[b]) for b in sorted(wanted) if b in mapping]
     if not paths:
-        schema_doc = doc.get("schema")
-        if schema_doc is None:
-            raise FileNotFoundError(
-                f"no live bucket for the requested keys at {root} and the "
-                "manifest predates schema stamping — cannot shape the empty "
-                "result"
-            )
-        from pyspark.sql.types import StructType
-
-        return spark.createDataFrame([], StructType.fromJson(schema_doc))
+        return spark.createDataFrame([], StructType.fromJson(doc["schema"]))
     scanned = spark.read.parquet(*paths)
     if len(key_cols) == 1 and len(rows) <= 2048:
         # literal IN predicate: pushes into the parquet scan (row-group
@@ -359,8 +343,7 @@ def commit_delta(
     buckets, so committing would record silently-corrupt buckets as a
     valid snapshot (updates re-inserted, deletes resurrected). Failing
     here keeps the previous snapshot fully intact: the stage write is
-    uncommitted until the manifest rename. Pre-stamp (legacy) manifests
-    fall back to the weaker max-bucket-id check.
+    uncommitted until the manifest rename.
 
     ``full_snapshot=True`` (``compact``'s mode) declares ``merged`` to be
     the COMPLETE table: the mapping is REPLACED by the stage write's
@@ -381,28 +364,15 @@ def commit_delta(
             f"v{base_version} (the caller's read) to v{current_v} — "
             "re-read the new snapshot and re-merge"
         )
-    mapping = (
-        {int(b): str(dv) for b, dv in doc["buckets"].items()}
-        if current_v >= 0
-        else {}
-    )
-    if not full_snapshot:
-        recorded = doc.get("n_buckets")
-        if recorded is not None:
-            if int(recorded) != n_buckets:
-                raise ValueError(
-                    f"bucket layout mismatch at {root}: manifest records "
-                    f"n_buckets={recorded}, caller passed {n_buckets} — "
-                    "pass the original count, or re-bucket via a FULL "
-                    "rewrite (compact(..., n_buckets=<new>) commits the "
-                    "whole snapshot and re-stamps)"
-                )
-        elif mapping and max(mapping) >= n_buckets:
-            raise ValueError(
-                f"bucket layout mismatch at {root}: committed bucket id "
-                f"{max(mapping)} exceeds caller n_buckets={n_buckets} — "
-                "the target was written with a larger bucket count"
-            )
+    mapping = dict(doc["buckets"]) if current_v >= 0 else {}
+    if not full_snapshot and current_v >= 0 and doc["n_buckets"] != n_buckets:
+        raise ValueError(
+            f"bucket layout mismatch at {root}: manifest records "
+            f"n_buckets={doc['n_buckets']}, caller passed {n_buckets} — "
+            "pass the original count, or re-bucket via a FULL rewrite "
+            "(compact(..., n_buckets=<new>) commits the whole snapshot and "
+            "re-stamps)"
+        )
     new_v = current_v + 1
     # unique per-attempt stage dir: a replayed crashed commit and a racing
     # writer each stage fresh, so NO path here ever mutates data another
@@ -446,8 +416,7 @@ def commit_delta(
             "n_buckets": n_buckets,
             # bucketing keys, stamped so maintenance (maintain()'s compact
             # tier) can rewrite the target without the caller re-supplying
-            # them; informational for legacy readers (routing authority
-            # stays n_buckets + bucket_expr)
+            # them (routing authority stays n_buckets + bucket_expr)
             "key_cols": list(key_cols),
             "buckets": {str(b): dv for b, dv in mapping.items()},
             # table schema at this version: the ONLY schema record when the
@@ -643,27 +612,18 @@ def describe_history(spark: SparkSession, root: str) -> DataFrame:
     if not versions:
         raise FileNotFoundError(f"no committed snapshot at {root}")
     rows = []
-    for v in sorted(versions):
-        doc = _doc_at(spark, root, v)
-        op = doc.get("operation")
-        touched = doc.get("touched")
-        live = len(doc.get("buckets", {}))
-        if touched is not None:
-            rewritten = len(touched)
-        elif op == "full":
-            rewritten = live  # a full commit rewrote every live bucket
-        else:
-            rewritten = None  # legacy pre-stamp manifest
+    for v in versions:
+        _, doc = _read_manifest_doc(spark, root, v)
         rows.append(
             (
                 v,
-                op,
-                rewritten,
-                live,
-                int(doc["n_buckets"]) if doc.get("n_buckets") is not None else None,
-                float(doc["committed_at"])
-                if doc.get("committed_at") is not None
-                else None,
+                doc["operation"],
+                # a full commit rewrote every live bucket and stamps no
+                # separate "touched" list
+                len(doc.get("touched", doc["buckets"])),
+                len(doc["buckets"]),
+                doc["n_buckets"],
+                float(doc["committed_at"]),
             )
         )
     return spark.createDataFrame(
@@ -768,9 +728,7 @@ def vacuum(
     Tests pass 0 to reclaim immediately."""
     if keep_manifests < 1:
         raise ValueError("keep_manifests must be >= 1 (0 would wipe the table)")
-    import time as _time
-
-    now_ms = _time.time() * 1000.0
+    now_ms = time.time() * 1000.0
     min_age_ms = min_attempt_age_seconds * 1000.0
 
     def _old_enough(status) -> bool:
@@ -783,14 +741,8 @@ def vacuum(
     fs, _ = _fs(spark, root)
     live: set[tuple[int, str]] = set()
     for v in retained:
-        # read each retained manifest's mapping directly
-        _, mpath = _fs(spark, f"{root}/{MANIFEST_DIR}/v{v}.json")
-        stream = fs.open(mpath)
-        try:
-            doc = json.loads(bytes(stream.readAllBytes()).decode("utf-8"))
-        finally:
-            stream.close()
-        live |= {(int(b), str(dv)) for b, dv in doc["buckets"].items()}
+        _, doc = _read_manifest_doc(spark, root, v)
+        live |= set(doc["buckets"].items())
     deleted: list[str] = []
     for v in versions[:-keep_manifests]:
         _, mpath = _fs(spark, f"{root}/{MANIFEST_DIR}/v{v}.json")
@@ -812,7 +764,7 @@ def vacuum(
                 continue
             if not _old_enough(vstat):
                 continue  # possibly an in-flight attempt — next vacuum's job
-            dv = vname[2:]  # "<n>-<token>", or plain "<n>" for legacy dirs
+            dv = vname[2:]  # "<n>-<token>"
             for bstat in fs.listStatus(vstat.getPath()):
                 bname = bstat.getPath().getName()  # "_bucket=<b>"
                 if not bname.startswith("_bucket="):
@@ -942,14 +894,7 @@ def delete_keys(
     current_v, doc = _read_manifest_doc(spark, root)
     if current_v < 0:
         raise FileNotFoundError(f"no committed snapshot at {root}")
-    n_buckets = doc.get("n_buckets")
-    if n_buckets is None:
-        raise ValueError(
-            f"manifest at {root} predates the n_buckets stamp — key routing "
-            "cannot be derived; re-commit once (any delta) to stamp it"
-        )
-    n_buckets = int(n_buckets)
-    mapping = {int(b): str(dv) for b, dv in doc["buckets"].items()}
+    n_buckets, mapping = doc["n_buckets"], doc["buckets"]
     rows = [k if isinstance(k, tuple) else (k,) for k in keys]
     if any(len(r) != len(key_cols) for r in rows):
         raise ValueError(f"every key must carry {len(key_cols)} value(s)")
@@ -1016,15 +961,7 @@ def delete_where(
     current_v, doc = _read_manifest_doc(spark, root)
     if current_v < 0:
         raise FileNotFoundError(f"no committed snapshot at {root}")
-    n_buckets = doc.get("n_buckets")
-    if n_buckets is None:
-        raise ValueError(
-            f"manifest at {root} predates the n_buckets stamp — bucket "
-            "routing cannot be derived; re-commit once (any delta) to "
-            "stamp it"
-        )
-    n_buckets = int(n_buckets)
-    mapping = {int(b): str(dv) for b, dv in doc["buckets"].items()}
+    n_buckets, mapping = doc["n_buckets"], doc["buckets"]
     snap = read_snapshot(spark, root, version=current_v)
     # bounded collect: distinct bucket ids of MATCHING rows (<= n_buckets)
     touched = sorted(
@@ -1080,15 +1017,7 @@ def update_where(
     current_v, doc = _read_manifest_doc(spark, root)
     if current_v < 0:
         raise FileNotFoundError(f"no committed snapshot at {root}")
-    n_buckets = doc.get("n_buckets")
-    if n_buckets is None:
-        raise ValueError(
-            f"manifest at {root} predates the n_buckets stamp — bucket "
-            "routing cannot be derived; re-commit once (any delta) to "
-            "stamp it"
-        )
-    n_buckets = int(n_buckets)
-    mapping = {int(b): str(dv) for b, dv in doc["buckets"].items()}
+    n_buckets, mapping = doc["n_buckets"], doc["buckets"]
     snap = read_snapshot(spark, root, version=current_v)
     missing = sorted(set(assignments) - set(snap.columns))
     if missing:

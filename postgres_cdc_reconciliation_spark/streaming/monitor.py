@@ -59,62 +59,6 @@ def wait_replication_complete(
     return poll_until(check, timeout_s, interval_s, **poll_kw)
 
 
-def observe_apply_metrics(df, name: str = "apply_metrics", lsn_col: str = "source_lsn"):
-    """Attach per-micro-batch observed metrics to a CDC stream: event count
-    and max applied LSN, computed inline by the batch's own tasks.
-
-    Push-based monitoring — the inverse of the reference's poll loop
-    (verify_replication.py:148-167): instead of re-querying the target per
-    interval, every micro-batch reports its own progress through
-    ``QueryProgressEvent.observedMetrics`` at zero extra scan cost
-    (``observe`` piggybacks accumulator-style on work already running —
-    no extra pass, no extra shuffle, no driver polling query). Pair with
-    ``MetricsRecorder`` to collect them.
-    """
-    from ..functions.lsn import lsn_to_long
-
-    return df.observe(
-        name,
-        F.count(F.lit(1)).alias("events"),
-        F.max(lsn_to_long(lsn_col)).alias("max_lsn_long"),
-    )
-
-
-class MetricsRecorder:
-    """StreamingQueryListener capturing observed apply metrics per batch.
-
-    ``batches`` accumulates (batch_id, events, max_lsn_long) in callback
-    order. Listener callbacks are asynchronous — tests should poll
-    ``batches`` (see ``poll_until``) rather than assert immediately after
-    ``awaitTermination``."""
-
-    def __new__(cls, name: str = "apply_metrics"):
-        from pyspark.sql.streaming import StreamingQueryListener
-
-        class _Listener(StreamingQueryListener):
-            def __init__(self, metric_name: str):
-                self.metric_name = metric_name
-                self.batches: list[tuple[int, int, int]] = []
-
-            def onQueryStarted(self, event):
-                pass
-
-            def onQueryProgress(self, event):
-                m = event.progress.observedMetrics.get(self.metric_name)
-                if m is not None and m["events"]:
-                    self.batches.append(
-                        (event.progress.batchId, m["events"], m["max_lsn_long"])
-                    )
-
-            def onQueryIdle(self, event):
-                pass
-
-            def onQueryTerminated(self, event):
-                pass
-
-        return _Listener(name)
-
-
 def heartbeat(spark, frontier_path: str) -> None:
     """Advance-on-idle: re-append the current max frontier row so downstream
     freshness checks see progress even with zero new events (T9).

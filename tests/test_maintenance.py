@@ -337,37 +337,26 @@ class TestMaintainExecutor:
         assert r2["compaction_due"] is False, r2["advice"]
 
     def test_manifest_key_cols_come_from_the_stamp(self, spark, tmp_path):
-        """compact needs key_cols; maintain reads them from the manifest's
-        own key_cols stamp (written by every commit since r13) instead of
-        requiring the caller to re-supply them."""
-        import json as _json
-
+        """compact needs key_cols; maintain reads them (and n_buckets) from
+        the manifest's own stamps instead of requiring the caller to
+        re-supply them."""
         from postgres_cdc_reconciliation_spark.operators.maintenance import (
             maintain,
         )
         from postgres_cdc_reconciliation_spark.operators.manifest_target import (
-            MANIFEST_DIR,
-            _manifest_versions,
+            _read_manifest_doc,
         )
 
         root = str(tmp_path / "mt")
         self._grown_manifest(spark, root)
-        # simulate a LEGACY manifest: strip the key_cols stamp
-        v = _manifest_versions(spark, root)[-1]
-        mpath = tmp_path / "mt" / MANIFEST_DIR / f"v{v}.json"
-        doc = _json.loads(mpath.read_text())
-        doc.pop("key_cols")
-        mpath.write_text(_json.dumps(doc))
-        # the out-of-band rewrite invalidates the Hadoop local-FS checksum
-        crc = mpath.parent / f".{mpath.name}.crc"
-        if crc.exists():
-            crc.unlink()
         done = maintain(
             spark, root, dry_run=False, max_files_per_bucket=4
         ).collect()
         row = [x for x in done if x["action"] == "manifest_compact"][0]
-        assert row["executed"] is False
-        assert "key_cols" in row["detail"]  # loud manual remediation
+        assert row["executed"] is True, row["detail"]
+        _, doc = _read_manifest_doc(spark, root)
+        assert doc["operation"] == "full"
+        assert (doc["key_cols"], doc["n_buckets"]) == (["k"], 4)
 
     def test_batch_store_swap_and_green(self, spark, tmp_path):
         from postgres_cdc_reconciliation_spark.operators.maintenance import (

@@ -31,6 +31,16 @@ def _seed(spark, tmp_path):
     return target, df, touched
 
 
+def _doc(df, touched, label):
+    """A v1 manifest body carrying every stamp a commit writes."""
+    return json.dumps(
+        {"version": 1, "n_buckets": 8, "key_cols": ["id"],
+         "buckets": {str(b): label for b in touched},
+         "schema": json.loads(df.schema.json()),
+         "operation": "delta", "touched": touched, "committed_at": 0.0}
+    )
+
+
 class _OverwritingRenameFS:
     """Python proxy over the Hadoop FileSystem that simulates an object
     store whose rename silently replaces an existing destination (plain
@@ -77,12 +87,8 @@ def test_racing_writers_one_wins_on_overwriting_rename_fs(
     target, df, touched = _seed(spark, tmp_path)
     _patched_fs(monkeypatch, _OverwritingRenameFS)
 
-    doc_a = json.dumps(
-        {"version": 1, "n_buckets": 8,
-         "buckets": {str(b): "1-winner" for b in touched},
-         "schema": json.loads(df.schema.json())}
-    )
-    doc_b = doc_a.replace("1-winner", "1-loser")
+    doc_a = _doc(df, touched, "1-winner")
+    doc_b = _doc(df, touched, "1-loser")
     mt._commit_manifest_doc(spark, target, 1, "1-winner", doc_a)
     with pytest.raises(IOError, match="lost the race"):
         mt._commit_manifest_doc(spark, target, 1, "1-loser", doc_b)
@@ -120,11 +126,7 @@ def test_fallback_rename_path_when_exclusive_create_unsupported(
     target, df, touched = _seed(spark, tmp_path)
     _patched_fs(monkeypatch, _NoExclusiveCreateFS)
 
-    doc = json.dumps(
-        {"version": 1, "n_buckets": 8,
-         "buckets": {str(b): "1-fb" for b in touched},
-         "schema": json.loads(df.schema.json())}
-    )
+    doc = _doc(df, touched, "1-fb")
     mt._commit_manifest_doc(spark, target, 1, "1-fb", doc)
     assert os.path.exists(f"{target}/{MANIFEST_DIR}/v1.json")
     with pytest.raises(IOError, match="lost the race"):

@@ -571,7 +571,7 @@ class TestMaintenanceRaces:
         self, spark, tmp_path, monkeypatch
     ):
         """base_version is carried even for the target's FIRST commit: a
-        writer committing v0 between the stream's read_manifest (which saw
+        writer committing v0 between the stream's manifest read (which saw
         -1, no snapshot) and its commit must surface as the lost race, not
         be silently reverted. Under the old base_version=None-when-v<0
         wiring the stream's v1 — merged from an EMPTY base — replaced the
@@ -602,10 +602,11 @@ class TestMaintenanceRaces:
         seed_key = probe.where(F.col("b") == b0).first()["order_id"]
 
         fired = {"n": 0}
-        real_read_manifest = mt.read_manifest
+        real_read_doc = mt._read_manifest_doc
 
-        def read_then_interleave(spark_, root_):
-            v, mapping = real_read_manifest(spark_, root_)
+        # the stream's merge reads the doc through the one manifest reader
+        def read_then_interleave(spark_, root_, version=None):
+            v, doc = real_read_doc(spark_, root_, version)
             if root_ == target and v < 0 and fired["n"] == 0:
                 fired["n"] += 1
                 seed = spark.createDataFrame(
@@ -614,9 +615,9 @@ class TestMaintenanceRaces:
                 mt.commit_delta(
                     seed, target, ["order_id"], [int(b0)], n_buckets
                 )
-            return v, mapping
+            return v, doc
 
-        monkeypatch.setattr(mt, "read_manifest", read_then_interleave)
+        monkeypatch.setattr(mt, "_read_manifest_doc", read_then_interleave)
 
         src = tmp_path / "in"
         src.mkdir()

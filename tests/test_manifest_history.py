@@ -1,16 +1,13 @@
 """describe_history: commit audit stamps (operation kind, touched-bucket
-count, live buckets, timestamps), legacy tolerance, vacuum interaction."""
+count, live buckets, timestamps), vacuum interaction."""
 
 from __future__ import annotations
-
-import json
 
 import pytest
 
 from pyspark.sql import functions as F
 
 from postgres_cdc_reconciliation_spark.operators.manifest_target import (
-    MANIFEST_DIR,
     commit_delta,
     compact,
     describe_history,
@@ -49,29 +46,6 @@ def test_history_rows_and_stamps(spark, tmp_path_factory):
     stamps = [r["committed_at"] for r in h]
     assert all(s is not None for s in stamps)
     assert stamps == sorted(stamps)  # same writer, monotone wall clock
-
-
-def test_history_tolerates_legacy_manifests(spark, tmp_path_factory):
-    """Pre-stamp manifests (no operation/committed_at) appear with NULL
-    audit columns instead of blowing up the whole history."""
-    import os
-
-    root = str(tmp_path_factory.mktemp("hist"))
-    commit_delta(_df(spark), root, ["k"], list(range(N_BUCKETS)), N_BUCKETS)
-    mpath = f"{root}/{MANIFEST_DIR}/v0.json"
-    doc = json.load(open(mpath))
-    for k in ("operation", "committed_at", "touched"):
-        doc.pop(k, None)
-    with open(mpath, "w") as f:
-        json.dump(doc, f)
-    crc = f"{root}/{MANIFEST_DIR}/.v0.json.crc"
-    if os.path.exists(crc):
-        os.remove(crc)
-    r = describe_history(spark, root).first()
-    assert r["version"] == 0 and r["live_buckets"] == N_BUCKETS
-    assert r["operation"] is None
-    assert r["buckets_rewritten"] is None
-    assert r["committed_at"] is None
 
 
 def test_history_shrinks_with_vacuum(spark, tmp_path_factory):

@@ -1,6 +1,6 @@
 """Key-routed point lookup over a manifest target (read_keys): correct
-rows, O(touched buckets) IO, composite keys, version pinning, legacy
-manifests, and absent keys."""
+rows, O(touched buckets) IO, composite keys, version pinning, manifests
+without stamps, and absent keys."""
 
 from __future__ import annotations
 
@@ -111,7 +111,7 @@ def test_legacy_manifest_without_stamp_fails_loud(spark, tmp_path_factory):
     crc = f"{root}/{MANIFEST_DIR}/.v0.json.crc"
     if os.path.exists(crc):
         os.remove(crc)
-    with pytest.raises(ValueError, match="n_buckets stamp"):
+    with pytest.raises(ValueError, match="'n_buckets' stamp"):
         read_keys(spark, root, ["k"], [1])
 
 

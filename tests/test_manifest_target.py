@@ -419,6 +419,64 @@ def test_manifest_schema_evolution_commits_all_buckets(spark, tmp_path):
     assert rows[3]["region"] == "eu" and rows[1]["region"] is None
 
 
+def test_manifest_stream_rejects_new_column_without_evolution(spark, tmp_path):
+    """The reject half of the new-column check on the manifest protocol:
+    with evolve_schema=False a micro-batch carrying a column the target
+    lacks fails the stream, and the committed snapshot keeps its version
+    and its rows."""
+    import pytest
+
+    from pyspark.errors import StreamingQueryException
+
+    target = str(tmp_path / "mtarget")
+    src1 = tmp_path / "m1"
+    src1.mkdir()
+    _write_events(
+        src1 / "a.json",
+        [
+            (str(i), _env("r", None, _row(i, i * 10.0), f"0/{i:X}"))
+            for i in range(1, 6)
+        ],
+    )
+    _run_stream(spark, src1, target, str(tmp_path / "mck1"))
+    v0, mapping0 = read_manifest(spark, target)
+
+    src2 = tmp_path / "m2"
+    src2.mkdir()
+    with open(src2 / "b.json", "w") as f:
+        f.write(
+            json.dumps(
+                {"order_id": 3, "customer_id": 3, "amount": "33.00",
+                 "ts": None, "batch_id": 1, "region": "eu", "op": "u",
+                 "source_lsn": "0/100", "ts_ms": 2, "__deleted": "false"}
+            )
+            + "\n"
+        )
+    stream = spark.readStream.schema(
+        "order_id long, customer_id int, amount string, ts timestamp_ntz, "
+        "batch_id long, region string, op string, source_lsn string, "
+        "ts_ms long, __deleted string"
+    ).json(str(src2))
+    q = apply_stream(
+        stream,
+        target,
+        ["order_id"],
+        str(tmp_path / "mck2"),
+        n_buckets=8,
+        protocol="manifest",
+        evolve_schema=False,
+    ).trigger(availableNow=True).start()
+    with pytest.raises(StreamingQueryException, match="absent from the target"):
+        q.awaitTermination(120)
+
+    assert read_manifest(spark, target) == (v0, mapping0)
+    snap = read_snapshot(spark, target)
+    assert "region" not in snap.columns
+    assert {r["order_id"]: float(r["amount"]) for r in snap.collect()} == {
+        i: i * 10.0 for i in range(1, 6)
+    }
+
+
 def test_changed_buckets_pruning_logic():
     from postgres_cdc_reconciliation_spark.operators.manifest_target import (
         changed_buckets,
@@ -505,10 +563,7 @@ def test_commit_validates_bucket_count(spark, tmp_path):
     """The manifest-protocol twin of the layout-sidecar check: a commit
     whose caller holds the wrong n_buckets has merged the WRONG buckets'
     prior content — commit_delta must refuse before the manifest rename,
-    leaving the previous snapshot fully intact. Legacy manifests without
-    the stamp fall back to the max-bucket-id check."""
-    import os
-
+    leaving the previous snapshot fully intact."""
     import pytest
 
     root = str(tmp_path / "target")
@@ -525,17 +580,6 @@ def test_commit_validates_bucket_count(spark, tmp_path):
     # the refused commit left the snapshot at v0 with the original count
     v, mapping = read_manifest(spark, root)
     assert v == 0 and mapping
-
-    # legacy manifest (pre-stamp): strip the n_buckets field in place
-    mpath = os.path.join(root, "_manifests", "v0.json")
-    doc = json.load(open(mpath))
-    doc.pop("n_buckets")
-    json.dump(doc, open(mpath, "w"))
-    crc = os.path.join(root, "_manifests", ".v0.json.crc")
-    if os.path.exists(crc):  # hadoop local FS checksums sidecar files
-        os.remove(crc)
-    with pytest.raises(ValueError, match="bucket layout mismatch"):
-        commit_delta(delta, root, ["order_id"], [0, 1], 4)  # dirs exceed 4
     # matching count still commits
     commit_delta(delta, root, ["order_id"], [0, 1], 8)
     v, _ = read_manifest(spark, root)
@@ -916,17 +960,70 @@ def test_empty_snapshot_commits_and_reads(spark, tmp_path):
 
 
 def test_legacy_empty_manifest_without_schema_fails_loud(spark, tmp_path):
-    """Pre-schema-stamp manifests have no schema record: an empty snapshot
-    under one can only fail loud (there are no parquet files to infer
-    from) — and the error names the cause, not a generic read failure."""
+    """A manifest without the schema stamp fails loud even when its
+    snapshot is empty (there are no parquet files to infer from), and
+    the error names the missing stamp, not a generic read failure."""
     import pytest
 
     target = str(tmp_path / "t")
     (tmp_path / "t" / "_manifests").mkdir(parents=True)
     with open(tmp_path / "t" / "_manifests" / "v0.json", "w") as f:
-        f.write(json.dumps({"version": 0, "n_buckets": 8, "buckets": {}}))
-    with pytest.raises(FileNotFoundError, match="schema"):
+        f.write(
+            json.dumps(
+                {"version": 0, "n_buckets": 8, "key_cols": ["k"], "buckets": {},
+                 "operation": "full", "committed_at": 0}
+            )
+        )
+    with pytest.raises(ValueError, match="'schema' stamp"):
         read_snapshot(spark, target)
+
+
+def test_manifest_missing_stamp_fails_loud(spark, tmp_path):
+    """Every commit writes the full stamp set, and the one manifest reader
+    rejects a doc missing any required stamp with an error naming the
+    field — for readers, writers and the history alike (no reader falls
+    back to a guess)."""
+    import os
+
+    import pytest
+
+    from postgres_cdc_reconciliation_spark.operators.manifest_target import (
+        MANIFEST_DIR,
+        describe_history,
+        read_keys,
+    )
+
+    target = str(tmp_path / "t")
+    df = spark.createDataFrame([(i, f"v{i}") for i in range(10)], "k long, v string")
+    commit_delta(df, target, ["k"], list(range(8)), 8)
+    mpath = os.path.join(target, MANIFEST_DIR, "v0.json")
+    crc = os.path.join(target, MANIFEST_DIR, ".v0.json.crc")
+    with open(mpath) as f:
+        full = json.load(f)
+    stamps = (
+        "version", "n_buckets", "key_cols", "buckets", "schema",
+        "operation", "committed_at",
+    )
+    assert set(stamps) <= set(full)
+    for stamp in stamps:
+        with open(mpath, "w") as f:
+            json.dump({k: v for k, v in full.items() if k != stamp}, f)
+        if os.path.exists(crc):  # Hadoop's local-FS checksum of the old body
+            os.remove(crc)
+        for call in (
+            lambda: read_snapshot(spark, target),
+            lambda: read_keys(spark, target, ["k"], [1]),
+            lambda: commit_delta(df, target, ["k"], list(range(8)), 8),
+            lambda: describe_history(spark, target),
+        ):
+            with pytest.raises(ValueError, match=f"lacks the required '{stamp}'"):
+                call()
+    # the snapshot is readable again once the doc is whole
+    with open(mpath, "w") as f:
+        json.dump(full, f)
+    if os.path.exists(crc):
+        os.remove(crc)
+    assert read_snapshot(spark, target).count() == 10
 
 
 def test_concurrent_writers_loser_fails_loud_winner_intact(spark, tmp_path):

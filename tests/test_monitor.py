@@ -103,42 +103,3 @@ def test_heartbeat_logs_non_missing_read_failure(spark, tmp_path, caplog):
     with caplog.at_level(logging.WARNING, logger="postgres_cdc_reconciliation_spark.streaming.monitor"):
         heartbeat(spark, str(bad))
     assert any("heartbeat: frontier read failed" in r.message for r in caplog.records)
-
-
-def test_observed_apply_metrics_reach_listener(spark, tmp_path):
-    """observe() metrics ride the micro-batch (no extra scan) and surface
-    through the listener: per-batch event counts and max applied LSN."""
-    import json as _json
-
-    from postgres_cdc_reconciliation_spark.streaming.monitor import (
-        MetricsRecorder,
-        observe_apply_metrics,
-        poll_until,
-    )
-
-    src = tmp_path / "in"
-    src.mkdir()
-    with open(src / "b1.json", "w") as f:
-        for i in range(1, 6):
-            f.write(_json.dumps({"k": str(i), "source_lsn": f"0/{i:X}"}) + "\n")
-
-    rec = MetricsRecorder()
-    spark.streams.addListener(rec)
-    try:
-        stream = observe_apply_metrics(
-            spark.readStream.schema("k string, source_lsn string").json(str(src))
-        )
-        q = (
-            stream.writeStream.format("noop")
-            .option("checkpointLocation", str(tmp_path / "ck"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        # listener callbacks are async: poll briefly
-        assert poll_until(lambda: len(rec.batches) >= 1, 30.0, 0.5)
-    finally:
-        spark.streams.removeListener(rec)
-    (batch_id, events, max_lsn) = rec.batches[0]
-    assert events == 5
-    assert max_lsn == 5  # lsn 0/5 encodes to 5
