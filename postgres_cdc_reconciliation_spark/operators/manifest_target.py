@@ -63,9 +63,11 @@ import json
 import secrets
 import time
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructField, StructType
 
 from .apply import bucket_expr, cluster_by_bucket
 
@@ -189,6 +191,32 @@ def _bucket_path(root: str, bucket: int, stage_label: str) -> str:
     return f"{root}/{STAGE_DIR}/v={stage_label}/_bucket={bucket}"
 
 
+def _local_frame(spark: SparkSession, schema: StructType, rows: list) -> DataFrame:
+    """``rows`` (tuples) as a frame typed by ``schema``, planned as a
+    LocalRelation: built through arrow, so it runs no Spark job, where
+    ``createDataFrame`` of a Python list is a Python RDD that does.
+
+    Each column is converted with its inferred type and then safe-cast,
+    so a value the column type cannot hold exactly (1.5 into a ``long``,
+    2**40 into an ``int``) raises instead of being truncated."""
+    arrow = to_arrow_schema(schema)
+    cols = [list(c) for c in zip(*rows)] or [[] for _ in arrow]
+    table = pa.Table.from_arrays(
+        [pa.array(c).cast(f.type) for c, f in zip(cols, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, schema)
+
+
+def _read_stamped(spark: SparkSession, doc: dict, paths: list[str]) -> DataFrame:
+    """Read ``paths`` with the schema the manifest stamps, never inferring
+    it (inference is a Spark job per read); no paths is the empty frame
+    of that schema."""
+    schema = StructType.fromJson(doc["schema"])
+    if not paths:
+        return _local_frame(spark, schema, [])
+    return spark.read.schema(schema).parquet(*paths)
+
+
 def _mapping_at(
     spark: SparkSession, root: str, version: int | None
 ) -> dict[int, str]:
@@ -212,15 +240,13 @@ def read_snapshot(
     table (first commit was empty, or every key was deleted) — distinct
     from "no snapshot committed". An empty snapshot has no parquet files
     to carry the schema, so the manifest stamps it at commit time and the
-    empty frame is rebuilt from that record."""
+    empty frame is rebuilt from that record. Non-empty reads take their
+    schema from the same stamp (``_read_stamped``), never by inference."""
     v, doc = _read_manifest_doc(spark, root, version)
     if v < 0:
         raise FileNotFoundError(f"no committed snapshot at {root}")
-    buckets = doc["buckets"]
-    if not buckets:
-        return spark.createDataFrame([], StructType.fromJson(doc["schema"]))
-    paths = [_bucket_path(root, b, dv) for b, dv in sorted(buckets.items())]
-    return spark.read.parquet(*paths)
+    paths = [_bucket_path(root, b, dv) for b, dv in sorted(doc["buckets"].items())]
+    return _read_stamped(spark, doc, paths)
 
 
 def read_buckets(
@@ -229,11 +255,60 @@ def read_buckets(
     """Read only the listed buckets' current dirs (partition pruning by
     path — per-batch merge IO stays O(touched buckets), never O(target)).
     Returns None when none of the buckets has live data."""
-    _, mapping = read_manifest(spark, root)
+    _, doc = _read_manifest_doc(spark, root)
+    mapping = doc.get("buckets", {})
     paths = [_bucket_path(root, b, mapping[b]) for b in buckets if b in mapping]
     if not paths:
         return None
-    return spark.read.parquet(*paths)
+    return _read_stamped(spark, doc, paths)
+
+
+def _route_keys(
+    spark: SparkSession,
+    doc: dict,
+    key_cols: list[str],
+    keys: list,
+    reject_null: bool = False,
+) -> tuple[list[tuple], DataFrame, list[int]]:
+    """(key tuples, typed key frame, sorted live bucket ids) for a
+    key-routed read or delete — no Spark job.
+
+    The key frame is typed from the manifest's stamped key-column types,
+    so ``bucket_expr`` hashes each key exactly as every commit hashed the
+    stored column (a Python int typed as ``long`` on an ``int`` column
+    would hash to another bucket). It is a LocalRelation, so the bucket
+    ids fold into it and collect on the driver; they are deduped here."""
+    rows = [k if isinstance(k, tuple) else (k,) for k in keys]
+    if any(len(r) != len(key_cols) for r in rows):
+        raise ValueError(f"every key must carry {len(key_cols)} value(s)")
+    if reject_null and any(v is None for r in rows for v in r):
+        # A NULL among the requested keys would make the two delete paths
+        # DISAGREE: `x IN (..., NULL)` is NULL for every non-matching row,
+        # so the isin fast path's `isNull | ~isin` filter would drop ALL
+        # non-requested rows in the touched buckets (silent mass delete),
+        # while the anti-join path treats a NULL key as matching nothing.
+        # NULL is not a key under the apply contract anyway (last-per-key
+        # needs key equality); reject loudly instead of guessing.
+        raise ValueError(
+            "delete_keys: key values must not be None — NULL never equals "
+            "a stored key (SQL semantics), so a NULL key cannot name a row "
+            "to delete; filter Nones out, or use delete_where with an "
+            "explicit IS NULL predicate"
+        )
+    stamped = {f.name: f.dataType for f in StructType.fromJson(doc["schema"]).fields}
+    missing = [c for c in key_cols if c not in stamped]
+    if missing:
+        raise ValueError(f"key column(s) {missing} not in the target's schema")
+    key_schema = StructType([StructField(c, stamped[c]) for c in key_cols])
+    try:
+        keys_df = _local_frame(spark, key_schema, rows)
+    except (pa.ArrowException, OverflowError) as e:
+        raise ValueError(
+            f"keys do not fit the target's key types {key_schema.simpleString()}: {e}"
+        ) from e
+    ids = keys_df.select(bucket_expr(key_cols, doc["n_buckets"])).collect()
+    live = sorted({r[0] for r in ids} & set(doc["buckets"]))
+    return rows, keys_df, live
 
 
 def read_keys(
@@ -262,29 +337,22 @@ def read_keys(
     millions; for bulk subsets join against ``read_snapshot`` instead).
     ``version`` pins a committed manifest (time travel), default latest.
 
-    Returns an empty frame with the snapshot's schema when no requested
-    bucket is live (all keys absent)."""
+    Building the frame runs no Spark job: the keys route on the driver
+    (``_route_keys``, typed from the manifest's stamped schema) and the
+    routed files are read with that schema, not an inferred one, so the
+    scan is the lookup's one job. Returns an empty frame with the
+    snapshot's schema when no requested bucket is live (all keys
+    absent)."""
     if not keys:
         raise ValueError("keys must be non-empty — for a full read use read_snapshot")
     v, doc = _read_manifest_doc(spark, root, version)
     if v < 0:
         raise FileNotFoundError(f"no committed snapshot at {root}")
-    n_buckets, mapping = doc["n_buckets"], doc["buckets"]
-    rows = [k if isinstance(k, tuple) else (k,) for k in keys]
-    if any(len(r) != len(key_cols) for r in rows):
-        raise ValueError(f"every key must carry {len(key_cols)} value(s)")
-    keys_df = spark.createDataFrame(rows, key_cols)
-    # bounded collect: ≤ len(keys) ids, deduped — this is the routing step
-    wanted = {
-        r["_b"]
-        for r in keys_df.select(
-            bucket_expr(key_cols, n_buckets).alias("_b")
-        ).distinct().collect()
-    }
-    paths = [_bucket_path(root, b, mapping[b]) for b in sorted(wanted) if b in mapping]
-    if not paths:
-        return spark.createDataFrame([], StructType.fromJson(doc["schema"]))
-    scanned = spark.read.parquet(*paths)
+    rows, keys_df, live = _route_keys(spark, doc, key_cols, keys)
+    # no live bucket reads as the stamped schema's empty local frame
+    scanned = _read_stamped(
+        spark, doc, [_bucket_path(root, b, doc["buckets"][b]) for b in live]
+    )
     if len(key_cols) == 1 and len(rows) <= 2048:
         # literal IN predicate: pushes into the parquet scan (row-group
         # min/max + dictionary filtering), no join at all. Above ~2k keys
@@ -654,21 +722,23 @@ def snapshot_changes(
     buckets the diff is one full-outer PK join + null-safe column compare
     (the recon J7 idiom).
     """
-    map_from = _mapping_at(spark, root, v_from)
-    map_to = _mapping_at(spark, root, v_to)
+    _, doc_from = _read_manifest_doc(spark, root, v_from)
+    _, doc_to = _read_manifest_doc(spark, root, v_to)
+    map_from, map_to = doc_from.get("buckets", {}), doc_to.get("buckets", {})
     delta = changed_buckets(map_from, map_to)
     empty_type = F.lit(None).cast("string").alias("_change_type")
     if not delta:
         probe = read_snapshot(spark, root, v_to)
         return probe.limit(0).select("*", empty_type)
 
-    def _side(mapping: dict[int, str]) -> DataFrame | None:
+    def _side(doc: dict) -> DataFrame | None:
+        mapping = doc.get("buckets", {})
         paths = [
             _bucket_path(root, b, mapping[b]) for b in delta if b in mapping
         ]
-        return spark.read.parquet(*paths) if paths else None
+        return _read_stamped(spark, doc, paths) if paths else None
 
-    old, new = _side(map_from), _side(map_to)
+    old, new = _side(doc_from), _side(doc_to)
     if new is None and old is None:  # unreachable given delta nonempty
         raise AssertionError("changed buckets with no data on either side")
     if new is None:
@@ -879,8 +949,9 @@ def delete_keys(
     tools/verify_replication.py's target DB; here the key->bucket hash
     replaces the B-tree).
 
-    Routing is ``read_keys``'s: the requested keys hash to their buckets
-    (bounded driver job), ONLY those buckets' current dirs are read, the
+    Routing is ``read_keys``'s (``_route_keys``): the requested keys hash
+    to their buckets on the driver, with no Spark job, and ONLY those
+    buckets' current dirs are read (with the stamped schema); the
     survivors (everything but the requested keys) re-commit through
     ``commit_delta`` with ``base_version`` carried — a concurrent writer's
     commit between the read and this commit raises the documented
@@ -894,37 +965,11 @@ def delete_keys(
     current_v, doc = _read_manifest_doc(spark, root)
     if current_v < 0:
         raise FileNotFoundError(f"no committed snapshot at {root}")
-    n_buckets, mapping = doc["n_buckets"], doc["buckets"]
-    rows = [k if isinstance(k, tuple) else (k,) for k in keys]
-    if any(len(r) != len(key_cols) for r in rows):
-        raise ValueError(f"every key must carry {len(key_cols)} value(s)")
-    if any(v is None for r in rows for v in r):
-        # A NULL among the requested keys would make the two delete paths
-        # DISAGREE: `x IN (..., NULL)` is NULL for every non-matching row,
-        # so the isin fast path's `isNull | ~isin` filter would drop ALL
-        # non-requested rows in the touched buckets (silent mass delete),
-        # while the anti-join path treats a NULL key as matching nothing.
-        # NULL is not a key under the apply contract anyway (last-per-key
-        # needs key equality); reject loudly instead of guessing (ADVICE
-        # r12).
-        raise ValueError(
-            "delete_keys: key values must not be None — NULL never equals "
-            "a stored key (SQL semantics), so a NULL key cannot name a row "
-            "to delete; filter Nones out, or use delete_where with an "
-            "explicit IS NULL predicate"
-        )
-    keys_df = spark.createDataFrame(rows, key_cols)
-    wanted = sorted(
-        r["_b"]
-        for r in keys_df.select(
-            bucket_expr(key_cols, n_buckets).alias("_b")
-        ).distinct().collect()
-    )
-    live = [b for b in wanted if b in mapping]
+    rows, keys_df, live = _route_keys(spark, doc, key_cols, keys, reject_null=True)
     if not live:
         return current_v  # nothing to delete — snapshot unchanged
-    prior = spark.read.parquet(
-        *[_bucket_path(root, b, mapping[b]) for b in live]
+    prior = _read_stamped(
+        spark, doc, [_bucket_path(root, b, doc["buckets"][b]) for b in live]
     )
     if len(key_cols) == 1 and len(rows) <= 2048:
         # NULL-key rows survive explicitly: ~isin(...) evaluates NULL for a
@@ -938,7 +983,7 @@ def delete_keys(
     else:
         survivors = prior.join(F.broadcast(keys_df), key_cols, "left_anti")
     return commit_delta(
-        survivors, root, key_cols, live, n_buckets, base_version=current_v
+        survivors, root, key_cols, live, doc["n_buckets"], base_version=current_v
     )
 
 
@@ -974,8 +1019,8 @@ def delete_where(
     live = [b for b in touched if b in mapping]
     if not live:
         return current_v  # no matching rows — snapshot unchanged
-    prior = spark.read.parquet(
-        *[_bucket_path(root, b, mapping[b]) for b in live]
+    prior = _read_stamped(
+        spark, doc, [_bucket_path(root, b, mapping[b]) for b in live]
     )
     survivors = prior.where(~F.coalesce(pred, F.lit(False)))
     return commit_delta(
@@ -1032,8 +1077,8 @@ def update_where(
     live = [b for b in touched if b in mapping]
     if not live:
         return current_v  # no matching rows — snapshot unchanged
-    prior = spark.read.parquet(
-        *[_bucket_path(root, b, mapping[b]) for b in live]
+    prior = _read_stamped(
+        spark, doc, [_bucket_path(root, b, mapping[b]) for b in live]
     )
     hit = F.coalesce(pred, F.lit(False))
     by_name = {f.name: f.dataType for f in prior.schema.fields}

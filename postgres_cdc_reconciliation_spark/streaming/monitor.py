@@ -76,7 +76,7 @@ def heartbeat(spark, frontier_path: str) -> None:
         # typed check first (stable across Spark versions), message substring
         # only as a last resort for non-AnalysisException wrappers
         if isinstance(e, AnalysisException):
-            cls = getattr(e, "getErrorClass", lambda: None)()
+            cls = e.getCondition()
             if cls is not None:
                 return cls == "PATH_NOT_FOUND"
         return "PATH_NOT_FOUND" in str(e) or "Path does not exist" in str(e)

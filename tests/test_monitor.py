@@ -83,11 +83,15 @@ def test_heartbeat_keeps_frontier_value(spark, tmp_path):
 
 
 def test_heartbeat_missing_path_is_silent_noop(spark, tmp_path, caplog):
-    """Pre-first-batch: no frontier dir yet → no-op, no warning."""
+    """Pre-first-batch: no frontier dir yet → no-op, no warning, and no
+    deprecated-API FutureWarning from the missing-path check."""
     import logging
+    import warnings
 
     with caplog.at_level(logging.WARNING, logger="postgres_cdc_reconciliation_spark.streaming.monitor"):
-        heartbeat(spark, str(tmp_path / "nonexistent-frontier"))
+        with warnings.catch_warnings():
+            warnings.simplefilter("error", FutureWarning)
+            heartbeat(spark, str(tmp_path / "nonexistent-frontier"))
     assert not caplog.records
 
 
